@@ -27,6 +27,7 @@ import argparse
 import json
 import sys
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from multiagent_document_etl_system_spark.session import get_spark
@@ -36,29 +37,16 @@ DEFAULT_REGISTRY = "./schema_registry.parquet"
 
 def cmd_process(args) -> dict:
     from multiagent_document_etl_system_spark.io import (
-        read_landing_dir,
         safe_overwrite_parquet,
         write_parquet,
     )
     from multiagent_document_etl_system_spark.plans.pipeline import run_pipeline
     from multiagent_document_etl_system_spark.sources.parsers import (
-        parse_documents,
+        landing_documents,
     )
 
     spark = get_spark("doc-etl-process")
-    parsed = parse_documents(read_landing_dir(spark, args.input_dir))
-    # shape the parsed scan into the pipeline's document contract;
-    # parse_error rides along so the response carries the REAL failure
-    # detail (e.g. 'pdf library unavailable'), not just the too-short check
-    docs = parsed.select(
-        F.xxhash64("path").alias("doc_id"),
-        F.coalesce("raw_text", F.lit("")).alias("text"),
-        F.lit("und").alias("lang"),
-        F.element_at(F.split("path", "/"), -1).alias("source"),
-        F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
-        .alias("n_chars"),
-        "parse_error",
-    )
+    docs = landing_documents(spark, args.input_dir)
     hashes = docs.select("doc_id", F.md5(F.coalesce("text", F.lit("")))
                          .alias("content_hash"))
 
@@ -67,10 +55,12 @@ def cmd_process(args) -> dict:
     if incremental:
         try:
             prior = spark.read.parquet(args.output_dir)
-            if "content_hash" not in prior.columns:
-                prior = None  # pre-provenance output: fall back to full run
-        except Exception:  # noqa: BLE001 — first run: nothing to reuse
-            prior = None
+        except AnalysisException as exc:
+            # only a missing output is a first run; an unreadable one raises
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+        if prior is not None and "content_hash" not in prior.columns:
+            prior = None  # pre-provenance output: fall back to full run
 
     n_reused = 0
     if prior is not None:

@@ -120,13 +120,43 @@ def read_landing_dir(spark: SparkSession, path: str,
                      glob: str | None = None) -> DataFrame:
     """S6 — binary landing-directory scan (``/root/reference/src/app.py:46-116``).
 
-    Returns (path, modificationTime, length, content binary). At scale this is
-    the batch flavor of the streaming ingest in ``streaming/streamx.py``.
+    Returns (path, modificationTime, length, content binary), one row per
+    listed file. At scale this is the batch flavor of the streaming ingest
+    in ``streaming/streamx.py``.
+
+    Spark's file scan plans no split for a 0-byte file, so the scan alone
+    drops it. Its listing (``inputFiles``, after the glob and hidden-file
+    filters) still holds it: those files come back, from driver-side file
+    status calls, as literal rows with empty ``content`` unioned to the
+    scan. No Spark job runs. The rows are literals rather than
+    ``createDataFrame`` data, whose Python-fed RDD every job reading the
+    plan would run again.
     """
+    from pyspark.sql import functions as F
+
     reader = spark.read.format("binaryFile")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
+    scan = reader.load(path)
+    fs, HPath = _hadoop_fs(spark, path)
+    URI = spark._jvm.java.net.URI  # resolved once: each lookup is a JVM call
+    empty = []
+    for uri in scan.inputFiles():
+        st = fs.getFileStatus(HPath(URI(uri)))
+        if st.getLen() == 0:
+            empty.append(F.struct(
+                F.lit(st.getPath().toString()).alias("path"),
+                F.timestamp_millis(F.lit(st.getModificationTime()))
+                .alias("modificationTime"),
+                F.lit(0).cast("bigint").alias("length"),
+                F.lit(b"").alias("content")))
+    if not empty:
+        return scan
+    rows = spark.range(1, numPartitions=1).select(F.inline(F.array(*empty)))
+    # coalesce folds the rows into the scan's partitions: a bare union gives
+    # every job that reads the result a second branch with its own tasks
+    return scan.unionByName(rows).coalesce(
+        max(scan.rdd.getNumPartitions(), 1))
 
 
 def read_jsonl_corpus(spark: SparkSession, path: str,

@@ -6,23 +6,21 @@ the driver records a weaker rows-only check (reserved for genuinely
 non-SQL-expressible ops: MinHash/SimHash signatures use xxhash64 which
 DuckDB lacks; approx_count_distinct HLLs differ by construction).
 
-Split into per-domain modules in r11 (verdict #5) from the former
-6,700-line plans/registry.py. The import order BELOW is load-bearing: it
-reproduces the original file's top-to-bottom registration order exactly
-(the external driver samples the first 50 QUERIES entries in insertion
-order, and QUERIES.md documents the rest in the same order) —
-tests/test_registry_order.py pins the head and
-tests/test_registry_split.py pins the full 251-name sequence against the
-pre-split snapshot. Every module registers into the shared dict in
-``_base`` via the ``_q`` decorator at import time; the two window
-reorders (in ``windows`` after the pre-r6 surface, and here after the
-last registration) permute the dict IN PLACE so all modules keep aliasing
-one object.
+Every domain module registers into the shared dict in ``_base`` via the
+``_q`` decorator at import time, so the import order below is the
+registration order. After the last registration the dict is reordered
+once, in place (every module keeps aliasing the one object): the names
+of ``DRIVER_HEAD`` lead, because the external driver checks the first
+50 entries; everything else follows in registration order, which is
+also the order QUERIES.md documents. tests/test_registry_order.py pins
+the head and the full order.
 """
 
 from __future__ import annotations
 
 from multiagent_document_etl_system_spark.plans.registry._base import (  # noqa: F401
+    DRIVER_HEAD,
+    NO_ORACLE_REASONS,
     QUERIES,
     QueryFn,
     RELATIONAL_QUERIES,
@@ -45,11 +43,10 @@ from multiagent_document_etl_system_spark.plans.registry import (  # noqa: E402,
 )
 
 # relational surface (analytics.py) — registered between the search slice
-# and the window pins, exactly where the monolith merged it
+# and the reports slice, exactly where the monolith merged it
 QUERIES.update(RELATIONAL_QUERIES)
 
 from multiagent_document_etl_system_spark.plans.registry import (  # noqa: E402,F401
-    windows,
     reports,
     sinks,
 )
@@ -63,45 +60,11 @@ from multiagent_document_etl_system_spark.plans.registry.curation import (  # no
 from multiagent_document_etl_system_spark.plans.registry.sinks import (  # noqa: E402,F401
     ENV_GATED_REASONS,
 )
-from multiagent_document_etl_system_spark.plans.registry.windows import (  # noqa: E402,F401
-    _DRIVER_WINDOW_R4,
-    _DRIVER_WINDOW_R5,
-    _DRIVER_WINDOW_R6,
-    _DRIVER_WINDOW_R7,
-    _DRIVER_WINDOW_R8,
-    _DRIVER_WINDOW_R9,
-    _DRIVER_WINDOW_R10,
-    _DRIVER_WINDOW_R11,
-    _DRIVER_WINDOW_R12,
-    _QUEUED_FOR_R6,
-    _QUEUED_FOR_R7,
-    _QUEUED_FOR_R8,
-    _QUEUED_FOR_R9,
-    _QUEUED_FOR_R10,
-    _QUEUED_FOR_R11,
-    _QUEUED_FOR_R12,
-    _QUEUED_FOR_R13,
-    NO_ORACLE_REASONS,
-    _driver_ordered,
-)
 
-# Re-apply the driver-window ordering AFTER the last registration: queries
-# registered below the first reorder (in `windows`) would otherwise append
-# at the dict tail even when the pinned window names them — exactly the
-# off-by-one that left r5's head one slot short. In place, so every module
-# keeps aliasing the same dict. Idempotent; tests/test_registry_order.py
-# pins head == window.
-_ordered = _driver_ordered(QUERIES)
+# head names first; update() keeps their slots and appends the rest in
+# registration order
+_ordered = {n: QUERIES[n] for n in DRIVER_HEAD if n in QUERIES}
+_ordered.update(QUERIES)
 QUERIES.clear()
 QUERIES.update(_ordered)
 del _ordered
-
-
-def __getattr__(name: str):
-    # _LAST_INGEST_WORKDIR is REBOUND (global) inside reports at query
-    # run time — a static `from .reports import` here would freeze the
-    # import-time value; proxy the attribute dynamically instead.
-    if name == "_LAST_INGEST_WORKDIR":
-        return reports._LAST_INGEST_WORKDIR
-    raise AttributeError(
-        f"module {__name__!r} has no attribute {name!r}")

@@ -118,14 +118,11 @@ def process_document_bytes(filename: str, payload: bytes) -> dict:
     src/app.py:81-96 logs/filename attachment): ``{"success", "error",
     "data": {"record_id", "doc_type", "extracted", "file_url", ...},
     "logs", "filename"}`` — ``data`` is None on failure."""
-    from pyspark.sql import functions as F
-
-    from multiagent_document_etl_system_spark.io import read_landing_dir
     from multiagent_document_etl_system_spark.plans.pipeline import (
         run_pipeline,
     )
     from multiagent_document_etl_system_spark.sources.parsers import (
-        parse_documents,
+        landing_documents,
     )
 
     spark = _spark()
@@ -135,17 +132,7 @@ def process_document_bytes(filename: str, payload: bytes) -> dict:
     try:
         with open(f"{tmp}/{fname}", "wb") as fh:
             fh.write(payload)
-        parsed = parse_documents(read_landing_dir(spark, tmp))
-        docs = parsed.select(
-            F.xxhash64("path").alias("doc_id"),
-            F.coalesce("raw_text", F.lit("")).alias("text"),
-            F.lit("und").alias("lang"),
-            F.lit(fname).alias("source"),
-            F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
-            .alias("n_chars"),
-            "parse_error",
-        )
-        row = run_pipeline(spark, docs).first()
+        row = run_pipeline(spark, landing_documents(spark, tmp)).first()
         if row is None:
             logs.append("Error: no document parsed from upload")
             return {"success": False,

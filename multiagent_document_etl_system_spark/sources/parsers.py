@@ -1970,3 +1970,22 @@ def parse_documents(binary_df: DataFrame) -> DataFrame:
         .withColumn("parse_error", F.col("_p.parse_error"))
         .drop("_p")
     )
+
+
+def landing_documents(spark, landing_dir: str) -> DataFrame:
+    """A landing directory as the pipeline's document contract: one row
+    per file (doc_id, text, lang, source, n_chars, parse_error).
+    parse_error rides along so a response carries the REAL failure detail
+    (e.g. 'pdf library unavailable'), not just the too-short check."""
+    from multiagent_document_etl_system_spark.io import read_landing_dir
+
+    parsed = parse_documents(read_landing_dir(spark, landing_dir))
+    return parsed.select(
+        F.xxhash64("path").alias("doc_id"),
+        F.coalesce("raw_text", F.lit("")).alias("text"),
+        F.lit("und").alias("lang"),
+        F.element_at(F.split("path", "/"), -1).alias("source"),
+        F.coalesce(F.length("raw_text"), F.lit(0)).cast("bigint")
+        .alias("n_chars"),
+        "parse_error",
+    )

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import hashlib
 import json
+
+import pytest
+from py4j.protocol import Py4JJavaError
 
 from multiagent_document_etl_system_spark import cli
 
@@ -19,17 +23,23 @@ def test_process_landing_dir(spark, tmp_path, capsys):
     (landing / "inv.txt").write_text(
         "Invoice order value\nbilling@example.com total due 2024-03-05 129.99")
     (landing / "tiny.txt").write_text("short")
+    (landing / "empty.txt").write_bytes(b"")
     out_dir = str(tmp_path / "out")
 
     rc, resp = _run(capsys, ["process", str(landing), out_dir])
     assert rc == 0
-    assert resp == {"success": True, "documents": 2, "processed_ok": 1,
-                    "valid": 1, "reused": 0, "recomputed": 2,
+    assert resp == {"success": True, "documents": 3, "processed_ok": 1,
+                    "valid": 1, "reused": 0, "recomputed": 3,
                     "incremental": False, "output": out_dir}
     got = spark.read.parquet(out_dir).collect()
     by_ok = {r["success"]: r for r in got}
-    assert by_ok[False]["error"] == "Parsing failed: document too short"
     assert by_ok[True]["email"] == "billing@example.com"
+    # a 0-byte file still gets its row (Spark's scan plans no split for it)
+    failed = {r["content_hash"]: r["error"] for r in got if not r["success"]}
+    assert failed == {hashlib.md5(b"short").hexdigest():
+                      "Parsing failed: document too short",
+                      hashlib.md5(b"").hexdigest():
+                      "Parsing failed: document too short"}
 
 
 def test_process_real_pdf_and_docx(spark, tmp_path, capsys):
@@ -118,6 +128,23 @@ def test_process_incremental_reuses_unchanged(spark, tmp_path, capsys):
     inc = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     full = sorted(map(tuple, spark.read.parquet(full_dir).collect()))
     assert inc == full
+
+
+def test_process_incremental_raises_on_unreadable_prior_output(
+        spark, tmp_path):
+    """Only a missing output is a first run: a prior output that exists
+    but cannot be read raises instead of being overwritten."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.txt").write_text("Invoice order value " + "pad " * 20)
+    out = tmp_path / "out"
+    out.mkdir()
+    part = out / "part-0.parquet"
+    part.write_bytes(b"not a parquet file")
+
+    with pytest.raises(Py4JJavaError, match="part-0.parquet"):
+        cli.main(["process", str(landing), str(out), "--incremental"])
+    assert part.read_bytes() == b"not a parquet file"
 
 
 def test_curate_writes_funnel_survivors(spark, tmp_path, capsys):

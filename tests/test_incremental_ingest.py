@@ -60,6 +60,7 @@ def test_batch_statuses_route_correctly(spark, planted_dir):
 def test_streaming_run_matches_batch_and_updates_index(spark, planted_dir):
     from multiagent_document_etl_system_spark.operators import dedup
     from multiagent_document_etl_system_spark.plans import registry
+    from multiagent_document_etl_system_spark.plans.registry import reports
 
     out = registry.QUERIES["st_incremental_ingest"][0](spark, planted_dir)
     got = {r["shard"]: r.asDict() for r in out.collect()}
@@ -67,7 +68,7 @@ def test_streaming_run_matches_batch_and_updates_index(spark, planted_dir):
     # implies (exact + near dups never land)
     assert sum(r["n_docs"] for r in got.values()) == 3
 
-    work = registry._LAST_INGEST_WORKDIR
+    work = reports._LAST_INGEST_WORKDIR
     assert work is not None
     # every sink is epoch=N-partitioned (idempotent micro-batch
     # overwrites, ADVICE r7 #2); drop the partition column for the

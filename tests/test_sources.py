@@ -38,6 +38,26 @@ def test_binary_scan_and_dispatch(spark, landing):
     assert fmt["f.bin"] == "text"
 
 
+def test_landing_scan_keeps_zero_byte_files(spark, tmp_path):
+    """One row per listed file, 0-byte files included (Spark's scan plans
+    no split for them); hidden files and the glob still filter."""
+    for name, body in (("a.txt", b"text"), ("empty.txt", b""),
+                       ("empty.pdf", b""), (".hidden", b""),
+                       ("_skip", b"")):
+        (tmp_path / name).write_bytes(body)
+
+    def rows(glob=None):
+        got = {r["path"]: (r["length"], bytes(r["content"])) for r in
+               read_landing_dir(spark, str(tmp_path), glob).collect()}
+        # the added rows spell their path as the scan does (doc_id hashes it)
+        assert len({p.rsplit("/", 1)[0] for p in got}) == 1, got
+        return {p.rsplit("/", 1)[1]: v for p, v in got.items()}
+
+    assert rows() == {"a.txt": (4, b"text"), "empty.txt": (0, b""),
+                      "empty.pdf": (0, b"")}
+    assert rows("*.txt") == {"a.txt": (4, b"text"), "empty.txt": (0, b"")}
+
+
 def test_parse_documents_text_path_and_row_errors(spark, landing):
     out = parsers.parse_documents(read_landing_dir(spark, landing))
     rows = {r["name"]: r for r in out.select(

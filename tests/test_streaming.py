@@ -362,11 +362,10 @@ def test_st_user_profile_tws_registry_oracle(spark, duck):
     transformWithStateInPandas profile must hash-match its DuckDB
     oracle exactly the way the driver compares (all-integer outputs,
     order-insensitive). Also pins the gate bookkeeping: registered here
-    (the conftest shim is active) ⇒ not in ENV_GATED_REASONS, queued
-    for the R12 window."""
+    (the conftest shim is active) ⇒ not in ENV_GATED_REASONS, inside
+    the driver's 50-name window."""
     from multiagent_document_etl_system_spark.plans.registry import (
         ENV_GATED_REASONS,
-        _QUEUED_FOR_R12,
         QUERIES,
     )
 
@@ -374,7 +373,7 @@ def test_st_user_profile_tws_registry_oracle(spark, duck):
 
     assert "st_user_profile_tws" in QUERIES
     assert "st_user_profile_tws" not in ENV_GATED_REASONS
-    assert "st_user_profile_tws" in _QUEUED_FOR_R12
+    assert "st_user_profile_tws" in list(QUERIES)[:50]
     driver_compare(spark, duck, "st_user_profile_tws")
 
 

@@ -7,11 +7,12 @@ float rounding). Run:
 
     python tools/check_oracle.py [--vanilla] [sf_dir] [query ...]
     python tools/check_oracle.py --window    # the driver's pinned 50 head
-    python tools/check_oracle.py --queued    # next round's queued adds
+    python tools/check_oracle.py --queued    # oracled, never driver-checked
 """
 
 from __future__ import annotations
 
+import json
 import sys
 import time
 from pathlib import Path
@@ -69,6 +70,16 @@ def table_repr(cols: list[str], rows: list[tuple]) -> tuple[int, list[str], list
     return len(rows), sorted_cols, out
 
 
+def never_checked(queries: dict) -> list[str]:
+    """Oracled queries outside the driver's 50-name window that have no
+    row in any CORRECTNESS_r*.json, in registry order."""
+    checked = set()
+    for path in Path(REPO).glob("CORRECTNESS_r*.json"):
+        checked |= set(json.loads(path.read_text()))
+    return [n for n in list(queries)[50:]
+            if queries[n][1] and n not in checked]
+
+
 def main() -> int:
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
@@ -95,15 +106,7 @@ def main() -> int:
         # exactly what the external driver checks: the pinned head
         names += list(QUERIES)[:50]
     if queued:
-        # queries added after the window pin (next round's rotation) —
-        # resolve the HIGHEST-numbered _QUEUED_FOR_R* list so the flag
-        # tracks the current round without a per-round edit here
-        from multiagent_document_etl_system_spark.plans.registry import (
-            windows as _w,
-        )
-        latest = max((n for n in dir(_w) if n.startswith("_QUEUED_FOR_R")),
-                     key=lambda n: int(n.rsplit("R", 1)[1]))
-        names += [n for n in getattr(_w, latest) if n in QUERIES]
+        names += never_checked(QUERIES)
     names = names or list(QUERIES)
 
     if vanilla:

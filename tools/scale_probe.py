@@ -17,6 +17,8 @@ from pathlib import Path
 REPO = str(Path(__file__).resolve().parent.parent)
 sys.path.insert(0, REPO)
 
+from bench import REBUILD_PER_REP as BENCH_REBUILD  # noqa: E402
+
 DEFAULT = [
     "q1_pricing_summary", "q3_top_revenue_orders", "q7_nation_trade",
     "q18_large_orders", "dedup_minhash_lsh", "dedup_exact_stats",
@@ -53,32 +55,16 @@ DEFAULT = [
     "td_bpe_segment", "st_bpe_fertility",
 ]
 
-#: iterative-clustering composites materialize eager per-round checkpoints
-#: at PLAN-BUILD time; timing only the final write would skip the
-#: propagation rounds, so these rebuild the DataFrame inside each rep
-#: (same contract as bench.py's REBUILD_PER_REP)
-REBUILD_PER_REP = {"td_curation_funnel", "td_prepare_corpus_v2",
-                   "dedup_clusters", "v24_graph_pagerank",
-                   "diag_prep_clusters",
-                   # 10 train rounds run at build time (argmax collects)
-                   "td_bpe_train", "td_bpe_segment",
-                   # streaming run + training execute at build time
-                   "st_bpe_fertility",
-                   # the foreachBatch ingest (5 micro-batches + epoch
-                   # overwrites) runs at build time; rebuilding times the
-                   # FULL streaming pipeline, not the manifest re-derive
-                   "st_incremental_ingest",
-                   # the provenance/ablation/histogram audits embed
-                   # duplicate_clusters' eager checkpoints too
-                   "td_dedup_provenance", "td_dedup_policy_ablation",
-                   "dedup_cluster_size_histogram",
-                   # grid-Lloyd fits collect at plan-build time (bench.py
-                   # REBUILD_PER_REP has the same entries) — rebuilding
-                   # keeps the fit inside the measurement
-                   "v17_pq_codes", "v18_pq_adc_topk", "v21_recall_matrix",
-                   "v8_ivf_topk", "v19_ivfpq_topk", "v27_ivfpq_residual",
-                   # the streaming sketch run executes at build time
-                   "st_kmv_stream"}
+#: queries whose plan build runs eager work (per-round checkpoints,
+#: collects, streaming runs); timing only the final write would skip it,
+#: so these rebuild the DataFrame inside each rep. bench.py's set plus
+#: the probe-only queries bench does not time, unioned as in
+#: tools/scale_rehearsal.py so the two sets cannot drift.
+REBUILD_PER_REP = BENCH_REBUILD | {
+    # duplicate_clusters' per-round localCheckpoints
+    "dedup_clusters", "diag_prep_clusters",
+    # BPE train rounds and the streaming run execute at build time
+    "td_bpe_segment", "st_bpe_fertility"}
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01",
        "/root/testdata/sf0.1"]
